@@ -9,8 +9,7 @@ VERDICT #1 measure-first):
      materialization action)
   e) verify stage alone, from pre-checkpointed candidates (semi-join
      prefilter + re-shingle + array_intersect)
-  f) the full query as benched (materialize_candidates=True)
-  g) the full query fully lazy (materialize_candidates=False)
+  f) the full query as benched (verify_candidates' lazy candidate cut)
 
 Each point is min-of-N warm runs in one JVM, interleaved rounds so
 host drift lands evenly. Prints one JSON line.
@@ -57,14 +56,7 @@ def main() -> None:
         "b_banded": lambda: noop(banded()),
         "c_candidates_lazy": lambda: noop(cands()),
         "d_cand_checkpoint": lambda: cands().localCheckpoint(eager=True),
-        "f_full_materialized": lambda: noop(
-            dd.minhash_near_dup_pairs(d, threshold=0.5)
-        ),
-        "g_full_lazy": lambda: noop(
-            dd.minhash_near_dup_pairs(
-                d, threshold=0.5, materialize_candidates=False
-            )
-        ),
+        "f_full": lambda: noop(dd.minhash_near_dup_pairs(d, threshold=0.5)),
     }
 
     # verify-only: checkpoint once outside the timer, then time the

@@ -697,14 +697,16 @@ def jaccard_verify(
     signature came from (a re-ingested id can carry different text in
     batch and corpus). Defaults to ``df`` for the self-join case.
 
-    Deliberately NOT prefiltered to candidate-pair ids: deriving that
-    id set for a broadcast semi-join re-executes the entire LSH
-    candidate-generation subtree a second time (Spark reuses no
-    common subexpression across the broadcast and join sides without
-    materialization) — measured 2.7s -> 4.7s at sf0.1. Re-shingling
-    the corpus once more is the cheaper side of that trade at every
-    scale; pipelines that already persist the candidate pairs can
-    pass a materialized ``pairs`` and add the prefilter themselves."""
+    Not prefiltered here: the candidate-id prefilter lives in
+    :func:`verify_candidates`, which cuts the candidate pairs first.
+    Deriving the id set from UNmaterialized candidates re-executes
+    the entire candidate-generation subtree a second time (Spark
+    reuses no common subexpression across the broadcast and join
+    sides without materialization) — measured 2.7s -> 4.7s at sf0.1.
+    That is why :func:`incremental_near_dup_pairs` calls this directly:
+    its candidates are an unmaterialized broadcast join against the
+    batch, and re-shingling the frames is cheaper than deriving them
+    twice."""
     sh = df.select(
         F.col(id_col).alias("id"),
         shingles(F.col(text_col), shingle_n).alias("sh"),
@@ -743,6 +745,46 @@ def jaccard_verify(
     return out.where(F.col("jaccard") >= threshold).drop("__nd")
 
 
+def verify_candidates(
+    cands: DataFrame,
+    df: DataFrame,
+    id_col: str = "doc_id",
+    text_col: str = "text",
+    shingle_n: int = 3,
+    threshold: float = 0.7,
+) -> DataFrame:
+    """The one candidate -> verified-pair step every self-join near-dup
+    path shares: ``cands`` (``id_a, id_b``, from
+    :func:`lsh_candidate_pairs` or :func:`lsh_candidate_pairs_from_banded`)
+    is cut, the corpus is semi-join-prefiltered to candidate ids, and
+    exact Jaccard runs on candidates only. Output columns ``id_a,
+    id_b, jaccard``.
+
+    The cut is a LAZY ``localCheckpoint``: ``cands`` feeds five plan
+    references (the pair input, the two union branches of the id set,
+    and each verify side's semi-join), and without the cut the plan
+    expands the candidate join five times; lazy keeps composition
+    free of Spark jobs, and the first action materializes it once.
+    Because the pairs are materialized, deriving the id set cannot
+    re-execute the LSH subtree (the trap :func:`jaccard_verify`
+    describes). The id set is BROADCAST: the checkpointed pairs are an
+    RDD leaf with no size stats, so the planner would otherwise fall
+    back to a sort-merge semi-join that shuffles the whole corpus by
+    id. Candidate ids are the near-dup working set (<= 2x|pairs|,
+    orders smaller than the corpus). A 100 TB run whose candidate set
+    outgrows broadcast swaps this one line for a Bloom prefilter.
+    Checkpoints live on executor-local storage; a long multi-stage
+    cluster job should persist the pairs to reliable storage first."""
+    cands = cands.localCheckpoint(eager=False)
+    ids = (
+        cands.select(F.col("id_a").alias(id_col))
+        .unionAll(cands.select(F.col("id_b").alias(id_col)))
+        .distinct()
+    )
+    df = df.join(F.broadcast(ids), id_col, "left_semi")
+    return jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
+
+
 def minhash_near_dup_pairs(
     df: DataFrame,
     id_col: str = "doc_id",
@@ -751,96 +793,16 @@ def minhash_near_dup_pairs(
     bands: int = 16,
     shingle_n: int = 3,
     threshold: float = 0.7,
-    materialize_candidates: bool = True,
 ) -> DataFrame:
     """Full near-dup pipeline: MinHash -> LSH buckets -> exact-Jaccard
-    verification. 100 TB path: every stage is a bucketed shuffle.
-
-    With ``materialize_candidates`` (default) the candidate pairs are
-    ``localCheckpoint``-ed and the corpus is semi-join-prefiltered to
-    candidate ids before the verify stage, so re-shingling covers only
-    candidates instead of the whole corpus twice — candidates are a
-    small fraction of the corpus at every scale, and because the pairs
-    are materialized, deriving the id set cannot re-execute the LSH
-    subtree (the trap the docstring of :func:`jaccard_verify`
-    describes; measured 2.6s -> 1.7s at sf0.1). Cost: the operator
-    becomes eager, and the checkpoint lives on executor-local storage
-    — pass ``False`` to stay fully lazy, or persist the pairs to
-    reliable storage yourself in a long multi-stage job."""
+    verification (:func:`verify_candidates`). 100 TB path: every stage
+    is a bucketed shuffle; the organize-once layout
+    (:func:`banded_bucketed_signatures`) feeds the same verify step."""
     signed = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    cands = lsh_candidate_pairs(signed, id_col, num_hashes, bands)
-    if materialize_candidates:
-        cands = cands.localCheckpoint(eager=True)
-        ids = (
-            cands.select(F.col("id_a").alias(id_col))
-            .unionAll(cands.select(F.col("id_b").alias(id_col)))
-            .distinct()
-        )
-        # broadcast the candidate-id set: the checkpointed pairs are an
-        # RDD leaf with no size stats, so the planner falls back to a
-        # sort-merge semi-join that shuffles the whole corpus by id.
-        # Candidate ids are the near-dup working set (<= 2x|pairs|,
-        # orders smaller than the corpus); a broadcast semi-join keeps
-        # the corpus scan shuffle-free. A 100 TB run whose candidate
-        # set outgrows broadcast swaps this for a Bloom prefilter.
-        df = df.join(F.broadcast(ids), id_col, "left_semi")
-    return jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
-
-
-def minhash_near_dup_pairs_bucketed(
-    spark,
-    df: DataFrame,
-    table_name: str,
-    path: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    num_hashes: int = 64,
-    bands: int = 16,
-    shingle_n: int = 3,
-    threshold: float = 0.7,
-    num_buckets: int = 32,
-) -> DataFrame:
-    """The 100 TB REGIME of :func:`minhash_near_dup_pairs`, end to
-    end: signatures are banded and materialized ONCE into the
-    ``(band_hash, band_idx)``-bucketed external table
-    (:func:`banded_bucketed_signatures` — one organize-time shuffle),
-    and the candidate self-join reads HashPartitioning off that scan
-    with ZERO band exchanges (plan-pinned in
-    tests/test_dedup_clusters.py::test_lsh_bucketed_band_join_exchange_free).
-    The verify stage is unchanged: the bucketed table IS the
-    candidate materialization (no localCheckpoint needed), the corpus
-    is semi-join-prefiltered to candidate ids, and exact Jaccard runs
-    on candidates only.
-
-    The layout is a physical lever only — output must be row-identical
-    to the derive-inline pipeline (same banding, same verify), which
-    is exactly what the graded registry twin
-    (`queries/q_text.d_minhash_lsh_near_dup_bucketed`) pins against
-    the all-pairs DuckDB oracle."""
-    signed = minhash_signatures(df, id_col, text_col, num_hashes, shingle_n)
-    banded = banded_bucketed_signatures(
-        spark, signed, table_name, path,
-        id_col=id_col, num_hashes=num_hashes, bands=bands,
-        num_buckets=num_buckets,
+    return verify_candidates(
+        lsh_candidate_pairs(signed, id_col, num_hashes, bands),
+        df, id_col, text_col, shingle_n, threshold,
     )
-    # lazy cut: the bucketed table spares the signature recompute, but
-    # the band self-join + distinct feeds five plan references (pair
-    # input, the two union branches of the id derivation, and each
-    # verify side's semi-join); share one RDD instead of expanding the
-    # join five times (same reasoning as lsh_candidate_pairs)
-    cands = lsh_candidate_pairs_from_banded(banded).localCheckpoint(
-        eager=False
-    )
-    ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionAll(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    # broadcast semi-join for the same reason as the inline path: the
-    # RDD-backed cands carry no size stats and the planner would
-    # otherwise shuffle the corpus through a sort-merge semi-join
-    df = df.join(F.broadcast(ids), id_col, "left_semi")
-    return jaccard_verify(cands, df, id_col, text_col, shingle_n, threshold)
 
 
 def incremental_near_dup_pairs(
@@ -1170,15 +1132,18 @@ def connected_components(
     #10). Default False: local mode has no reliable store and the
     extra write-to-dir round-trip per superstep is pure cost there.
 
-    Fault-tolerance caveat on the SETUP cut (sym): with lazy
-    checkpoints Spark only materializes the FIRST checkpoint the
-    action reaches (``spark.checkpoint.checkpointAllMarkedAncestors``
-    defaults to false), so ``sym`` is effectively a persist-level
-    cache (MEMORY_AND_DISK), not a checkpoint — it recomputes from the
-    full upstream pipeline if its cached blocks are lost (r13 ADVICE).
-    "Computed exactly once" therefore holds per-process in local mode
-    and best-effort on a cluster; the per-superstep ``updated`` cut is
-    the one that genuinely truncates lineage each iteration.
+    The SETUP cut (sym) differs by mode. Spark only materializes the
+    FIRST lazy checkpoint an action reaches
+    (``spark.checkpoint.checkpointAllMarkedAncestors`` defaults to
+    false), so a lazy cut on ``sym`` never materializes. Locally that
+    is harmless: ``localCheckpoint`` also persists (MEMORY_AND_DISK),
+    so ``sym`` is computed once per process and recomputes from the
+    upstream pipeline only if its cached blocks are lost (r13
+    ADVICE). A lazy reliable ``checkpoint()`` persists nothing, so
+    every superstep would re-run the whole upstream edge pipeline;
+    reliable mode therefore checkpoints ``sym`` EAGERLY, once, before
+    the loop (pinned by
+    tests/test_dedup_clusters.py::test_cc_reliable_checkpoint_edges_evaluated_once).
 
     r14: superstep 1 is join-free — iteration-0 labels are the
     identity map, so the first edge handoff is ``sym`` read directly
@@ -1211,7 +1176,7 @@ def connected_components(
         .join(ids.withColumnRenamed("id", "src"), "src", "left_semi")
         .join(ids.withColumnRenamed("id", "dst"), "dst", "left_semi")
     )
-    sym = _cut(sym)
+    sym = sym.checkpoint(eager=True) if reliable_checkpoint else _cut(sym)
     labels = None
     converged = False
     for _ in range(max_iters):
@@ -1300,10 +1265,11 @@ def neardup_clusters(
     transitive, but the DROP decision must be).
 
     ``pairs`` (optional, columns ``id_a, id_b``) supplies the verified
-    near-dup edges from elsewhere — e.g. the organize-once bucketed
-    signature layout (:func:`minhash_near_dup_pairs_bucketed`), so
-    repeated cluster consumers skip the eager inline pair derivation
-    entirely; by default the pairs derive inline. When ``pairs`` is
+    near-dup edges from elsewhere — e.g. :func:`verify_candidates`
+    over the organize-once bucketed signature layout
+    (:func:`banded_bucketed_signatures`), so repeated cluster
+    consumers skip the inline pair derivation entirely; by default
+    the pairs derive inline. When ``pairs`` is
     given, ``threshold``/``**minhash_kwargs`` CANNOT apply (the edges
     were derived elsewhere, at whatever parameters built them), so
     passing a non-default threshold or any minhash kwargs alongside

@@ -961,34 +961,14 @@ def _shared_banded_sigtable(spark, sf_dir):
 def _bucketed_neardup_pairs_t05(spark, sf_dir):
     """Verified near-dup pairs (threshold 0.5) read off the shared
     bucketed signature table: band self-join with ZERO band exchanges
-    (plan-pinned), corpus semi-prefiltered to candidate ids, exact
-    Jaccard on candidates only — row-identical to the derive-inline
-    pipeline (same banding, same verify)."""
+    (plan-pinned), then the shared :func:`dd.verify_candidates` step —
+    row-identical to the derive-inline pipeline (same banding, same
+    verify)."""
     banded = _shared_banded_sigtable(spark, sf_dir)
-    # Lazy cut on the candidate pairs (r14): the bucketed table spares
-    # the SIGNATURE recompute, but the band self-join + distinct
-    # itself feeds five references (the verify pair input, twice in
-    # the union deriving candidate ids, and once under each verify
-    # shingle side's semi-join) — without the cut the plan expands the
-    # join five times (measured: the pair stage was 2.2 s of
-    # curation_e2e's near-dup stage at sf0.1).
-    cands = dd.lsh_candidate_pairs_from_banded(banded).localCheckpoint(
-        eager=False
+    d = table(spark, sf_dir, "documents")
+    return dd.verify_candidates(
+        dd.lsh_candidate_pairs_from_banded(banded), d, threshold=0.5
     )
-    ids = (
-        cands.select(F.col("id_a").alias("doc_id"))
-        .unionAll(cands.select(F.col("id_b").alias("doc_id")))
-        .distinct()
-    )
-    # broadcast the candidate-id set (guide §3.2): the checkpointed
-    # cands are an RDD leaf without size stats, so the planner was
-    # sort-merge semi-joining — shuffling the documents scan AND the
-    # id set (4 exchanges across the two verify sides). Candidate ids
-    # are the near-dup working set, orders smaller than the corpus.
-    d = table(spark, sf_dir, "documents").join(
-        F.broadcast(ids), "doc_id", "left_semi"
-    )
-    return dd.jaccard_verify(cands, d, threshold=0.5)
 
 
 @query("d_minhash_lsh_near_dup_bucketed", oracle=_MINHASH_NEARDUP_ORACLE)

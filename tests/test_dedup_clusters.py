@@ -55,6 +55,48 @@ def test_cc_reliable_checkpoint_same_components(spark, tmp_path):
     assert local == reliable == {0: 0, 1: 0, 2: 0, 3: 3, 4: 3, 5: 5}
 
 
+def test_cc_reliable_checkpoint_edges_evaluated_once(spark, tmp_path):
+    """Reliable mode must cut the symmetrized edge list for real: a
+    lazy ``checkpoint()`` never materializes (only the first marked
+    RDD an action reaches is checkpointed) and persists nothing, so
+    every superstep re-ran the upstream edge pipeline. Count the
+    evaluations of ``edges`` through a Python-UDF accumulator on two
+    chains needing different numbers of supersteps: evaluations per
+    edge row must not grow with the superstep count."""
+    from pyspark.sql.types import LongType
+
+    spark.sparkContext.setCheckpointDir(str(tmp_path / "cc_ckpt"))
+
+    def evaluations(n):
+        acc = spark.sparkContext.accumulator(0)
+
+        def tap(x):
+            acc.add(1)
+            return x
+
+        tap_udf = F.udf(tap, LongType())
+        # range() carries size stats, so the vertex semi-joins
+        # broadcast and no shuffle boundary shields the edge UDF from
+        # recomputation (the regime of a parquet-backed corpus)
+        v = spark.range(n)
+        base = spark.createDataFrame(
+            [(i, i + 1) for i in range(n - 1)], "id_a long, id_b long"
+        ).coalesce(1)
+        edges = base.select(tap_udf("id_a").alias("id_a"), "id_b")
+        got = {
+            r["id"]: r["component"]
+            for r in dd.connected_components(
+                v, edges, reliable_checkpoint=True
+            ).collect()
+        }
+        assert got == {i: 0 for i in range(n)}
+        return acc.value / (n - 1)
+
+    short, long_ = evaluations(4), evaluations(10)  # ~4 vs ~10 supersteps
+    assert short > 0
+    assert long_ == short, (short, long_)
+
+
 def test_neardup_clusters_marks_survivors(spark):
     rows = [
         (0, "the quick brown fox jumps over the lazy dog today"),
@@ -259,8 +301,29 @@ def test_lsh_bucketed_band_join_exchange_free(spark, tmp_path):
         got = sorted(map(tuple, pairs.collect()))
         want = sorted(map(tuple, dd.lsh_candidate_pairs(sig).collect()))
         assert got == want and len(got) > 0
+
+        # the shared verify step must give identical rows over either
+        # candidate source
+        vb = sorted(map(tuple, dd.verify_candidates(
+            pairs, docs, threshold=0.5).collect()))
+        vi = sorted(map(tuple, dd.verify_candidates(
+            dd.lsh_candidate_pairs(sig), docs, threshold=0.5).collect()))
+        assert vb == vi and len(vb) > 0
     finally:
         spark.sql("DROP TABLE IF EXISTS lsh_banded_bucketed_test")
+
+
+def test_verify_candidates_empty_candidates(spark):
+    """No candidate pairs (a corpus without near-dups) must verify to
+    an empty ``(id_a, id_b, jaccard)`` frame, not an error from the
+    empty id broadcast or the empty checkpoint."""
+    docs = spark.createDataFrame(
+        [(1, "a b c d e"), (2, "v w x y z")], "doc_id long, text string"
+    )
+    cands = spark.createDataFrame([], "id_a long, id_b long")
+    out = dd.verify_candidates(cands, docs)
+    assert sorted(out.columns) == ["id_a", "id_b", "jaccard"]
+    assert out.collect() == []
 
 
 def test_crossdoc_dup_spans_hand_computed(spark):

@@ -184,3 +184,14 @@ def test_regrade_first_pins_to_front():
         nm, {"pinned_q", "old_green"}, {"old_green": 3}, ("pinned_q",)
     )
     assert order == ["pinned_q", "new_query", "old_green"]
+
+
+def test_regrade_first_names_are_registered():
+    """Every REGRADE_FIRST pin must name a registered query: the
+    ordering silently skips unknown names, so a typo would un-pin a
+    rewritten path without any error."""
+    from sftp_data_ingestion_spark.queries import QUERIES, REGRADE_FIRST
+
+    unknown = [n for n in REGRADE_FIRST if n not in QUERIES]
+    assert not unknown, unknown
+    assert len(set(REGRADE_FIRST)) == len(REGRADE_FIRST)

@@ -393,7 +393,8 @@ def test_cosine_bruteforce_broadcasts_query_side(spark):
     every pair score on a single core regardless of cluster size
     (measured 2.3s -> 16s at sf0.1 when size estimates picked the
     wrong side). Pinned on the operator directly — the registry query
-    moved to the Arrow kernel in r14 (next test)."""
+    moved to the Arrow kernel in r14
+    (test_cosine_arrow_kernel_no_corpus_shuffle)."""
     from sftp_data_ingestion_spark.ext import similarity as sim
     from sftp_data_ingestion_spark.queries.registry import table
 
@@ -406,18 +407,16 @@ def test_cosine_bruteforce_broadcasts_query_side(spark):
 
 
 def test_cosine_bruteforce_arrow_kernel_no_corpus_shuffle(spark):
-    """The graded brute-force query runs the Arrow/BLAS kernel (r13
-    VERDICT #7): the corpus flows scan -> (fan_out) -> MapInPandas
-    with NO join node and no corpus exchange beyond the small-input
-    fan-out; the only shuffle is the k·Q-row candidate reduction into
-    the final top-k window. Values are pinned identical to the
-    expression engine by test_similarity.py."""
+    """The graded brute-force query runs the Arrow/BLAS kernel: the
+    corpus flows scan -> MapInPandas with NO join node and no corpus
+    exchange; at most the window exchange above the kernel remains
+    (test_cosine_arrow_kernel_no_corpus_shuffle pins it to exactly
+    one). Values are pinned identical to the expression engine by
+    test_similarity.py."""
     df = q.QUERIES["v_cosine_topk_bruteforce"](spark, SF)
     p = plan(df)
     assert "MapInPandas" in p
     assert "Join" not in p  # kernel scores pairs; no join node at all
-    # exactly the fan-out exchange below the kernel and the window
-    # exchange above it
     assert p.count("Exchange") <= 2
 
 
@@ -911,13 +910,17 @@ def test_minhash_verify_broadcasts_candidate_ids(spark):
 
 
 def test_cosine_arrow_kernel_no_corpus_shuffle(spark):
-    """r14: the exact cosine top-k runs the Arrow kernel on the scan's
-    NATURAL splits — no exchange may sit between the corpus scan and
-    the Python kernel node (the pre-kernel fan_out paid 32 sliver
-    Python batches; at scale the scan's own splits parallelize)."""
+    """The graded brute-force query runs the Arrow/BLAS kernel (r13
+    VERDICT #7) and, since r14, on the scan's NATURAL splits: the
+    kernel scores pairs itself, so there is no join node, and no
+    exchange may sit between the corpus scan and the Python kernel
+    node (the pre-kernel fan_out paid 32 sliver Python batches; at
+    scale the scan's own splits parallelize). Values are pinned
+    identical to the expression engine by test_similarity.py."""
     df = q.QUERIES["v_cosine_topk_bruteforce"](spark, SF)
     p = plan(df)
     assert "MapInPandas" in p or "ArrowEvalPython" in p, p[:2000]
+    assert "Join" not in p, p[:3000]
     # exactly one shuffle total: the global top-k window over the
     # kernel's k-rows-per-batch output
     assert n_exchanges(p) == 1, p[:3000]

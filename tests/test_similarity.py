@@ -132,6 +132,14 @@ def test_wrong_dim_fails_loudly(spark, emb):
         ).collect()
 
 
+def test_ivf_empty_centroids_rejected(spark, emb):
+    """No cells means no index: fail up front with ValueError, not an
+    IndexError from reading the first centroid's length."""
+    q = emb.where(F.col("vec_id") < 3)
+    with pytest.raises(ValueError, match="centroids is empty"):
+        sim.ivf_topk(q, emb, [])
+
+
 def test_int8_quantization_roundtrip_error_bound(spark, emb):
     """Reconstruction error per component is bounded by scale/2 =
     max|v| / 254 — the defining property of symmetric int8

@@ -240,9 +240,7 @@ def test_jsonl_type_mismatch_is_corrupt_not_silent(spark, tmp_path):
 
 
 def test_compact_parquet_dir_merges_and_preserves_rows(spark, tmp_path):
-    from sftp_data_ingestion_spark.operators.compact import (
-        compact_parquet_dir,
-    )
+    from sftp_data_ingestion_spark.io.compact import compact_parquet_dir
 
     path = str(tmp_path / "staging")
     # 16 tiny appended files
@@ -255,13 +253,13 @@ def test_compact_parquet_dir_merges_and_preserves_rows(spark, tmp_path):
     assert n_before >= 16
     before = sorted(r["id"] for r in spark.read.parquet(path).collect())
 
-    m = compact_parquet_dir(spark, path, target_bytes=1 << 30)
+    m = compact_parquet_dir(spark, path, target_file_bytes=1 << 30)
     assert m["compacted"] and m["files_after"] == 1
     after = sorted(r["id"] for r in spark.read.parquet(path).collect())
     assert after == before == list(range(160))
 
     # already compact -> no-op
-    m2 = compact_parquet_dir(spark, path, target_bytes=1 << 30)
+    m2 = compact_parquet_dir(spark, path, target_file_bytes=1 << 30)
     assert not m2["compacted"]
 
 
