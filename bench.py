@@ -142,6 +142,23 @@ def _time_pass(
     return out
 
 
+def _prev_round_from_log(log: str) -> str | None:
+    """Pick the previous round's final commit from ``git log
+    --format=%H<TAB>%s`` output (newest first): the newest
+    'round N: …' commit whose N is below the round HEAD belongs to.
+    When HEAD is itself a 'round N:' snapshot, every round-N commit is
+    skipped — otherwise HEAD would be compared against itself."""
+    current = None
+    for i, line in enumerate(log.splitlines()):
+        h, _, msg = line.partition("\t")
+        m = re.match(r"round (\d+): ", msg)
+        if i == 0 and m:
+            current = int(m.group(1))
+        if m and (current is None or int(m.group(1)) < current):
+            return h
+    return None
+
+
 def _prev_round_commit() -> str | None:
     """The previous round's final tree = the most recent driver
     artifact commit ('round N: verdict/advice/correctness/bench')."""
@@ -155,11 +172,7 @@ def _prev_round_commit() -> str | None:
         )
     except Exception:
         return None
-    for line in out.stdout.splitlines():
-        h, _, msg = line.partition("\t")
-        if re.match(r"round \d+: ", msg):
-            return h
-    return None
+    return _prev_round_from_log(out.stdout)
 
 
 def _parity_vs_prev(sf_dir: str, n_rounds: int = 3) -> dict:

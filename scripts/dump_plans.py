@@ -31,7 +31,7 @@ NOTES = {
     "d_exact_dedup_survivors": "sha2 hash shuffle (uniform), window keep-first",
     "d_minhash_lsh_near_dup": "banded bucket self-join; signatures (not text) shuffle; nondeterministic-field barrier keeps the sim filter above the scored projection",
     "v_cosine_topk_bruteforce": "broadcast-NL pair stage (deliberate: probe side tiny), flat-codegen dot products, per-partition top-k",
-    "v_ivf_ann_topk": "centroids as literals (JVM-side), assignment per-row, candidate cells only",
+    "v_ivf_ann_topk": "every cell probed = exact search: ivf_topk routes to cosine_topk (query side broadcast into the broadcast-NL pair stage over the fanned-out corpus); no cell assignment, no Python worker. The probed cell join is pinned on v_ivf_ann_recall",
     "a_asof_join_backward": "NO join node: union-sort form, one shuffle on the by-keys",
     "s_sessionize_batch": "one window shuffle; gaps-and-islands in projections",
     "z2_cms_heavy_hitters": "grid-bounded partial agg; 256-row sketch broadcasts to the probe",

@@ -1,10 +1,12 @@
 #!/usr/bin/env python
 """Flat-vs-arrow centroid-assignment crossover probe (r13).
 
-Measures every assignment engine on the SAME pre-trained centroids at
+Measures every assignment kernel (``_kmeans_assign``,
+``_coarse_assign_expr``, ``kmeans_assign_arrow``,
+``coarse_assign_arrow``) on the SAME pre-trained centroids at
 a ladder of k values, on sf0.1 and (when present) the scale_probe.py
 derivation dir — the evidence behind similarity._ARROW_K_CROSSOVER and
-the auto-dispatch: below the crossover the literal-expression argmax
+the ``_use_arrow`` dispatch: below the crossover the literal-expression argmax
 wins (no Python worker round-trip), above it the O(k x dim) literal
 tree costs more in plan/codegen than the Arrow batch transfer, and at
 k ~ n it stops being a slowdown and becomes a plan-size blow-up.
@@ -60,8 +62,8 @@ def _engines(corpus, cents):
         cells["flat_expr"] = lambda: sim._kmeans_assign(
             corpus, cents, "embedding", "vec_id", 6
         ).select("id", "cluster_id", "score")
-        cells["coarse_expr"] = lambda: sim.coarse_assignments(
-            corpus, cents, n_groups=g, nprobe=2, engine="expr"
+        cells["coarse_expr"] = lambda: sim._coarse_assign_expr(
+            corpus, cents, "embedding", "vec_id", 6, g, 2
         )
     return cells
 
@@ -70,11 +72,16 @@ def probe(spark, sf_dir):
     corpus = _planted_corpus(spark, sf_dir).localCheckpoint()
     n = corpus.count()
     # one centroid set per k, shared by every engine (train under
-    # arrow: training engine is not what this probe measures)
-    trained = {
-        k: sim.kmeans_train(corpus, k=k, n_iters=1, engine="arrow")
-        for k in KS
-    }
+    # arrow at every k by dropping the crossover to 0: the training
+    # kernel is not what this probe measures)
+    crossover = sim._ARROW_K_CROSSOVER
+    sim._ARROW_K_CROSSOVER = 0
+    try:
+        trained = {
+            k: sim.kmeans_train(corpus, k=k, n_iters=1) for k in KS
+        }
+    finally:
+        sim._ARROW_K_CROSSOVER = crossover
     cells = {
         (k, name): fn
         for k in KS

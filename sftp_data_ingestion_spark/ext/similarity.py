@@ -133,6 +133,37 @@ def _norm_side(
     )
 
 
+def _topk_per_query(
+    scored: DataFrame, k: int, score_col: str = "sim_full", out_col: str = "sim"
+) -> DataFrame:
+    """The ranking contract every top-k operator here shares: per
+    ``query_id``, rank by the FULL-precision score descending with ties
+    to the smaller ``neighbor_id``, keep ``row_number() <= k``, and only
+    then round the score to 6 dp — rounding before ranking would turn
+    near-ties into exact ties and let the tiebreak reorder them."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col(score_col).desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= k)
+        .select("query_id", "neighbor_id", F.round(score_col, 6).alias(out_col))
+    )
+
+
+def _local_topk(ids, scores, top: int):
+    """Indices of the ``top`` best entries of one query's score vector
+    in exact ``(-score, id)`` order — the numpy twin of
+    :func:`_topk_per_query`, so a kernel's local cut agrees with the
+    global window — skipping ``-inf`` (excluded self) entries."""
+    import numpy as np
+
+    top = min(top, len(scores))
+    cand = np.argpartition(-scores, top - 1)[:top]
+    cand = cand[np.lexsort((ids[cand], -scores[cand]))]
+    return cand[scores[cand] != -np.inf]
+
+
 def cosine_topk(
     queries: DataFrame,
     corpus: DataFrame,
@@ -179,16 +210,7 @@ def cosine_topk(
         # comparison after CollapseProject inlines it
         .withColumn("__nd", F.monotonically_increasing_id())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select(
-            "query_id", "neighbor_id", F.round("sim_full", 6).alias("sim")
-        )
-    )
+    return _topk_per_query(scored, k)
 
 
 def cosine_topk_arrow(
@@ -262,18 +284,12 @@ def cosine_topk_arrow(
             sims = (c @ q_mat.T) / c_norm[:, None] / q_norm[None, :]
             sims[ids[:, None] == q_ids[None, :]] = -np.inf  # self
             out_q, out_n, out_s = [], [], []
-            top = min(per_batch, sims.shape[0])
             for j in range(q_mat.shape[0]):
                 col = sims[:, j]
-                # partial select then exact order by (-sim, neighbor_id)
-                cand = np.argpartition(-col, top - 1)[:top]
-                cand = cand[np.lexsort((ids[cand], -col[cand]))]
-                for i in cand:
-                    if col[i] == -np.inf:
-                        continue
-                    out_q.append(q_ids[j])
-                    out_n.append(ids[i])
-                    out_s.append(col[i])
+                cand = _local_topk(ids, col, per_batch)
+                out_q.extend([q_ids[j]] * len(cand))
+                out_n.extend(ids[cand])
+                out_s.extend(col[cand])
             yield pd.DataFrame(
                 {"query_id": out_q, "neighbor_id": out_n, "sim_full": out_s}
             )
@@ -290,14 +306,7 @@ def cosine_topk_arrow(
     scored = corpus.select(id_col, vec_col).mapInPandas(
         fn, "query_id long, neighbor_id long, sim_full double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
-    )
+    return _topk_per_query(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -313,8 +322,8 @@ def quantize_int8(
     one float scale — a 4x storage/shuffle/scan reduction on the
     corpus side (the first memory lever every vector store pulls
     before product quantization). Pure Column expressions; the max is
-    one interpreted fold per ROW (cheap — see the srp_signature note
-    on where HOFs are acceptable)."""
+    one interpreted fold per ROW (cheap: a higher-order function costs
+    only when evaluated per PAIR or per row x table x plane)."""
     v = as_double(F.col(vec_col))
     amax = F.aggregate(
         v, F.lit(0.0), lambda a, x: F.greatest(a, F.abs(x))
@@ -356,9 +365,8 @@ def _plane_component(plane: int, dim_idx: Column, seed: int) -> Column:
 
 # (n_planes, seed, dim) -> list of plane vectors, each a list of floats.
 # Values are produced by evaluating the EXACT _plane_component
-# expressions once on a one-row frame, so the literal-hoisted signature
-# path below is bit-identical to the per-row generation path (a Python
-# float round-trip preserves IEEE754 doubles exactly).
+# expressions once on a one-row frame (a Python float round-trip
+# preserves IEEE754 doubles exactly).
 _PLANE_CACHE: dict[tuple[int, int, int], list[list[float]]] = {}
 
 
@@ -369,8 +377,7 @@ def _plane_literals(n_planes: int, seed: int, dim: int) -> list[list[float]]:
     cached for the session lifetime. Hoisting the planes out of the
     per-row expression removes n_planes x dim xxhash64 evaluations
     from EVERY row of the signature stage — the dominant interpreted
-    cost at corpus scale — while the projection fold itself keeps the
-    same element order, so signatures cannot move."""
+    cost at corpus scale."""
     from pyspark.sql import SparkSession
 
     key = (n_planes, seed, dim)
@@ -392,8 +399,7 @@ def _plane_literals(n_planes: int, seed: int, dim: int) -> list[list[float]]:
             # index, silently collapsing every plane to the same
             # vector (each table then hashes with one effective plane
             # — ~2 buckets — which round-5 measurement caught as
-            # plane-count-invariant candidate counts). Same trap the
-            # srp_signature comment documents.
+            # plane-count-invariant candidate counts).
             return lambda i: _plane_component(p, i, seed)
 
         row = spark.range(1).select(
@@ -404,47 +410,6 @@ def _plane_literals(n_planes: int, seed: int, dim: int) -> list[list[float]]:
         ).head()
         _PLANE_CACHE[key] = [list(row[f"p{p}"]) for p in range(n_planes)]
     return _PLANE_CACHE[key]
-
-
-def srp_signature(
-    vec: Column, n_planes: int = 16, seed: int = 42
-) -> Column:
-    """Sign pattern of the vector against ``n_planes`` fixed random
-    hyperplanes, packed into one long — the pure-Column reference form
-    (expression-only, works on any engine surface including streaming).
-
-    The batch hot paths (:func:`srp_topk`,
-    :func:`embedding_near_dup_pairs`) use :func:`_srp_bucket_frame`
-    instead: signature cost scales with ROWS x tables x planes x dim,
-    and interpreted higher-order-function evaluation of that product
-    was the dominant ANN cost (measured ~12 s for 1000 rows x 64
-    signatures at 64 dims) — while flat unrolling to codegen was worse
-    still (n_tables x n_planes x dim terms put Janino compilation at
-    ~150 s, and literal-hoisted plane arrays ballooned Catalyst
-    analysis to ~30 s). The Arrow kernel computes the same projections
-    as one BLAS matmul per batch. Signs only pick CANDIDATE buckets —
-    every graded similarity value comes from the bit-exact JVM rescore
-    — so kernel/expression rounding differences cannot move results,
-    only (negligibly, at sign boundaries) recall."""
-    v = as_double(vec)
-    idx = F.sequence(F.lit(0), F.size(v) - 1)
-    acc = F.lit(0).cast("long")
-
-    def plane_at(p: int):
-        # closure, not a default-arg lambda (which would bind transform's
-        # index argument and collapse every plane to the same vector)
-        return lambda i: _plane_component(p, i, seed)
-
-    for p in range(n_planes):
-        proj = F.aggregate(
-            F.zip_with(v, F.transform(idx, plane_at(p)), lambda x, w: x * w),
-            F.lit(0.0),
-            lambda a, x: a + x,
-        )
-        acc = acc + F.when(proj >= 0, F.lit(1 << p).cast("long")).otherwise(
-            F.lit(0).cast("long")
-        )
-    return acc
 
 
 def _srp_bucket_frame(
@@ -460,12 +425,13 @@ def _srp_bucket_frame(
     one Arrow/numpy pass: all n_tables x n_planes projections are a
     single (batch x dim) @ (dim x T*P) matmul per Arrow batch.
 
-    The hyperplanes come from :func:`_plane_literals` — the exact
-    values the Column form uses. The id and vector columns pass
-    through Arrow untouched (IEEE754 round-trip is exact), so
-    downstream norms/rescoring are computed JVM-side on identical
-    bits. Buckets choose candidates only; see :func:`srp_signature`
-    for why kernel-vs-fold rounding cannot move graded values."""
+    The hyperplanes come from :func:`_plane_literals`. The id and
+    vector columns pass through Arrow untouched (IEEE754 round-trip is
+    exact), so downstream norms/rescoring are computed JVM-side on
+    identical bits. Signs only pick CANDIDATE buckets — every graded
+    similarity value comes from the bit-exact JVM rescore — so BLAS
+    rounding differences cannot move results, only (negligibly, at
+    sign boundaries) recall."""
     import numpy as np
 
     planes = [
@@ -581,14 +547,7 @@ def srp_topk(
         # pairs meeting in several tables dedup here (key-only compare;
         # sim_full is identical across tables for the same pair)
         scored = scored.dropDuplicates(["query_id", "neighbor_id"])
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
-    )
+    return _topk_per_query(scored, k)
 
 
 # ---------------------------------------------------------------------------
@@ -752,7 +711,6 @@ def kmeans_train(
     id_col: str = "vec_id",
     digits: int = 6,
     train_frac: float | None = None,
-    engine: str = "auto",
 ) -> list[list[float]]:
     """The EAGER half of the engine-portable k-means: stride-sample
     seeding + ``n_iters`` Lloyd iterations, returning the final
@@ -783,14 +741,14 @@ def kmeans_train(
     reproducible on any cluster size, never ``rand()``). Centroid
     quality needs a sample; membership needs the corpus.
 
-    ``engine`` picks the per-iteration assignment implementation:
-    ``expr`` (centroid-literal plan — right below the measured k~128
-    crossover), ``arrow`` (:func:`kmeans_assign_arrow`'s broadcast
-    numpy matrix — the large-k engine whose plan size is O(1) in k),
-    or ``auto`` (dispatch on the crossover). Either engine lands on
-    the same rounded cross-stage values, so the trained centroids are
-    engine-portable (graded: v_semdedup_coarse_k512 trains under
-    arrow against the same DuckDB replay the expr points use)."""
+    Each iteration's assignment runs on the centroid-literal plan at
+    or below the measured k~128 crossover and on
+    :func:`kmeans_assign_arrow`'s broadcast numpy matrix (plan size
+    O(1) in k) above it, for integral ids (:func:`_use_arrow`). Both
+    kernels land on the same rounded cross-stage values, so the
+    trained centroids do not depend on the choice (graded:
+    v_semdedup_coarse_k512 trains under arrow against the same DuckDB
+    replay the literal-plan points use)."""
 
     v = as_double(F.col(vec_col))
 
@@ -823,10 +781,10 @@ def kmeans_train(
         )
     ).collect()
     cents = [list(r["c"]) for r in seed_rows]
-    eng = _resolve_engine(engine, len(cents), train, id_col)
+    arrow = _use_arrow(len(cents), train, id_col)
 
     for _ in range(n_iters):
-        if eng == "arrow":
+        if arrow:
             a = kmeans_assign_arrow(
                 train, cents, vec_col, id_col, digits, keep_vec=True
             )
@@ -868,7 +826,6 @@ def kmeans_assignments(
     digits: int = 6,
     train_frac: float | None = None,
     centroids: list[list[float]] | None = None,
-    engine: str = "auto",
 ) -> DataFrame:
     """Per-vector assignment ``(id, cluster_id, score)`` from the
     engine-portable k-means loop — exposed so samplers and
@@ -888,15 +845,15 @@ def kmeans_assignments(
     walks the registry (pinned by
     tests/test_similarity.py::test_kmeans_injected_centroids_is_lazy).
     ``k``/``n_iters``/``train_frac`` are ignored when ``centroids``
-    is given. ``engine`` dispatches flat assignment between the
-    centroid-literal plan and :func:`kmeans_assign_arrow` (see
-    :func:`kmeans_train`); both engines are lazy here when centroids
-    are injected (broadcasting the numpy matrix runs no job)."""
+    is given. The flat assignment picks the centroid-literal plan or
+    :func:`kmeans_assign_arrow` from k and the id type, as in
+    :func:`kmeans_train`; both are lazy here when centroids are
+    injected (broadcasting the numpy matrix runs no job)."""
     if centroids is None:
         centroids = kmeans_train(
-            df, k, n_iters, vec_col, id_col, digits, train_frac, engine
+            df, k, n_iters, vec_col, id_col, digits, train_frac
         )
-    if _resolve_engine(engine, len(centroids), df, id_col) == "arrow":
+    if _use_arrow(len(centroids), df, id_col):
         return kmeans_assign_arrow(df, centroids, vec_col, id_col, digits)
     return _kmeans_assign(df, centroids, vec_col, id_col, digits).select(
         "id", "cluster_id", "score"
@@ -937,76 +894,34 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int | None = None,
-    corpus_engine: str = "expr",
 ) -> DataFrame:
     """IVF ANN top-k: corpus partitioned into centroid cells once;
     each query scores only its ``nprobe`` probed cells. Candidate cost
     ~ nprobe/k_cells of the corpus — the inverted-file scale path
-    (recall tunable via nprobe).
+    (recall tunable via nprobe). ``dim`` defaults to the centroid
+    width.
 
-    ``corpus_engine='arrow'`` runs the corpus-side cell assignment on
-    :func:`kmeans_assign_arrow` (broadcast numpy centroid matrix, one
-    BLAS matmul per Arrow batch) instead of the k x dim
-    literal-expression plan — the engine the r13 crossover probe
-    (scripts/kmeans_assign_probe.py) showed is flat in k while the
-    expr plan's compose/codegen cost grows linearly in k (measured
-    1.25 s/run for the expr corpus assign at sf0.1, k=16). The two
-    engines can DISAGREE on a vector's cell whenever its top two cell
-    scores are within ~1e-6 of each other — not just at ulp-level
-    ties: ``kmeans_assign_arrow`` argmaxes the HALF_UP-rounded
-    (``digits=6``) scores while :func:`ivf_assign` sorts unrounded
-    dots (r13 ADVICE). That seam is invisible only when every cell is
-    probed, so the arrow engine is REFUSED for ``nprobe < n_cells``
-    (raise below): in that regime cell assignment is part of the
-    output contract and callers must keep the expr engine. Note the
-    arrow engine also narrows the id contract: ``neighbor_id`` comes
-    back as long (int64 kernel) and non-integral id columns raise
-    TypeError up front."""
+    Probing every cell (``nprobe >= len(centroids)``) is exact search
+    by definition, so it IS :func:`cosine_topk`: no cell is assigned
+    and no probe job runs. Both paths score pairs with the same
+    :func:`_pair_sim` / :func:`_checked_norm` arithmetic and rank
+    through :func:`_topk_per_query`, so the exhaustive result is
+    row-identical to the probed machinery's by construction."""
     if not centroids:
         raise ValueError("ivf_topk: centroids is empty (need >= 1 cell)")
     if dim is None:
         dim = len(centroids[0])
-    if corpus_engine == "arrow" and nprobe < len(centroids):
-        raise ValueError(
-            "ivf_topk: corpus_engine='arrow' requires nprobe >= "
-            f"n_cells (got nprobe={nprobe}, n_cells={len(centroids)}) "
-            "— with unprobed cells the rounded-score argmax can move "
-            "a corpus vector across the probe boundary and change the "
-            "result; use the expression engine"
-        )
+    if nprobe >= len(centroids):
+        return cosine_topk(queries, corpus, k, id_col, vec_col, dim)
     qv = as_double(F.col(vec_col))
     q = ivf_assign(
         queries.select(F.col(id_col).alias("query_id"), vec_col),
         centroids, vec_col, nprobe,
     ).select("query_id", qv.alias("qv"), _checked_norm(qv, dim).alias("qn"), "cell")
-    if corpus_engine == "arrow":
-        cvec = F.col("__v")
-        # Assignment kernel on the scan's NATURAL splits, spread AFTER
-        # (the SRP-side pattern): the matmul needs no extra
-        # parallelism and pre-spreading a few-split scan pays 32
-        # Python task round-trips for sliver batches (measured
-        # 0.53 s -> 0.41 s assign, 2.31 s -> 2.08 s full query at
-        # sf0.1). The JVM pair-scoring under the broadcast join IS
-        # per-row heavy, so the kernel output fans out by id — same
-        # exchange bytes the old pre-kernel fan_out paid, and a no-op
-        # at scale where the scan is already wide.
-        c = fan_out(
-            kmeans_assign_arrow(
-                corpus.select(F.col(id_col), F.col(vec_col)),
-                centroids, vec_col, id_col, keep_vec=True,
-            ),
-            "id",
-        ).select(
-            F.col("id").alias("neighbor_id"),
-            cvec.alias("cv"),
-            _checked_norm(cvec, dim).alias("cn"),
-            F.col("cluster_id").alias("cell"),
-        )
-    else:
-        c = ivf_assign(
-            fan_out(corpus).select(F.col(id_col).alias("neighbor_id"), vec_col),
-            centroids, vec_col, nprobe=1,
-        ).select("neighbor_id", qv.alias("cv"), _checked_norm(qv, dim).alias("cn"), "cell")
+    c = ivf_assign(
+        fan_out(corpus).select(F.col(id_col).alias("neighbor_id"), vec_col),
+        centroids, vec_col, nprobe=1,
+    ).select("neighbor_id", qv.alias("cv"), _checked_norm(qv, dim).alias("cn"), "cell")
     # Broadcast the probe side: an ANN lookup's query set (x nprobe
     # replication) is the small side by construction, while a shuffle
     # join on `cell` would funnel the whole corpus through k_cells
@@ -1034,14 +949,7 @@ def ivf_topk(
         # reading the materialized column
         .withColumn("__nd", F.monotonically_increasing_id())
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
-    )
+    return _topk_per_query(scored, k)
 
 
 def embedding_near_dup_pairs(
@@ -1284,15 +1192,10 @@ def pq_topk(
                 # scores = sum over subspaces of table lookups
                 s = luts[qi][np.arange(m)[None, :], codes].sum(axis=1)
                 s[ids == q_ids[qi]] = -np.inf  # exclude self
-                top = min(k, len(s))
-                cand = np.argpartition(-s, top - 1)[:top]
-                cand = cand[np.lexsort((ids[cand], -s[cand]))]
-                for i in cand:
-                    if s[i] == -np.inf:
-                        continue
-                    out_q.append(q_ids[qi])
-                    out_n.append(ids[i])
-                    out_s.append(s[i])
+                cand = _local_topk(ids, s, k)
+                out_q.extend([q_ids[qi]] * len(cand))
+                out_n.extend(ids[cand])
+                out_s.extend(s[cand])
             yield pd.DataFrame(
                 {"query_id": out_q, "neighbor_id": out_n, "score": out_s}
             )
@@ -1300,14 +1203,7 @@ def pq_topk(
     scored = corpus_codes.mapInPandas(
         fn, "query_id long, neighbor_id long, score double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("score", 6).alias("score"))
-    )
+    return _topk_per_query(scored, k, "score", "score")
 
 
 def pq_topk_rerank(
@@ -1375,14 +1271,7 @@ def rerank_exact(
             ).alias("sim_full"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("sim_full").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", "neighbor_id", F.round("sim_full", 6).alias("sim"))
-    )
+    return _topk_per_query(scored, k)
 
 
 def ivfpq_topk_rerank(
@@ -1482,9 +1371,7 @@ def ivfpq_topk_rerank(
                     continue
                 sel = np.nonzero(mask)[0]
                 s = luts[qi][np.arange(m)[None, :], codes[sel]].sum(axis=1)
-                top = min(shortlist, len(s))
-                cand = np.argpartition(-s, top - 1)[:top]
-                cand = cand[np.lexsort((ids[sel][cand], -s[cand]))]
+                cand = _local_topk(ids[sel], s, shortlist)
                 out_q.extend([q_ids[qi]] * len(cand))
                 out_n.extend(ids[sel][cand])
                 out_s.extend(s[cand])
@@ -1495,13 +1382,8 @@ def ivfpq_topk_rerank(
     scored = indexed.mapInPandas(
         fn, "query_id long, neighbor_id long, score double"
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").desc(), F.col("neighbor_id").asc()
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= shortlist)
-        .select("query_id", "neighbor_id")
+    cand = _topk_per_query(scored, shortlist, "score", "score").select(
+        "query_id", "neighbor_id"
     )
     return rerank_exact(queries, corpus, cand, k, id_col, vec_col, dim)
 
@@ -1668,7 +1550,6 @@ def semdedup_survivors(
     coarse: bool = False,
     n_groups: int | None = None,
     nprobe: int = 2,
-    engine: str = "auto",
     target_cluster: int = 32,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster the
@@ -1710,17 +1591,14 @@ def semdedup_survivors(
         # ~2*sqrt(k) dots per row — approximate, gate on measured
         # recall (see coarse_assignments)
         if centroids is None:
-            centroids = kmeans_train(
-                df, k, n_iters, vec_col, id_col, digits, engine=engine
-            )
+            centroids = kmeans_train(df, k, n_iters, vec_col, id_col, digits)
         asg = coarse_assignments(
             df, centroids, vec_col, id_col, digits, n_groups=n_groups,
-            nprobe=nprobe, engine=engine,
+            nprobe=nprobe,
         )
     else:
         asg = kmeans_assignments(
             df, k, n_iters, vec_col, id_col, digits, centroids=centroids,
-            engine=engine,
         )
     v = as_double(F.col(vec_col))
     base = df.select(F.col(id_col).alias("id"), v.alias("v"))
@@ -1819,7 +1697,6 @@ def coarse_assignments(
     digits: int = 6,
     n_groups: int | None = None,
     nprobe: int = 2,
-    engine: str = "auto",
 ) -> DataFrame:
     """IVF-style two-stage centroid assignment: rank ~sqrt(k) group
     means first, then argmax over the top-``nprobe`` groups' member
@@ -1830,19 +1707,28 @@ def coarse_assignments(
     gate it on measured agreement/recall (see
     ``v_semdedup_coarse_recall``), exactly the IVF nprobe trade.
     Returns ``(id, cluster_id, score)`` like :func:`kmeans_assignments`;
-    fully lazy (centroids are literals). Above the measured k~128
-    crossover, ``engine='auto'`` dispatches to
-    :func:`coarse_assign_arrow` — same two-stage semantics, broadcast
-    numpy structure instead of the O(k x dim) nested literal tree
-    (which is a plan-size blow-up in the k ~ n regime, the exact gap
-    this escape exists for)."""
-    import math
-
-    k = len(centroids)
-    if _resolve_engine(engine, k, df, id_col) == "arrow":
+    fully lazy. At or below the measured k~128 crossover the centroids
+    travel as literals (:func:`_coarse_assign_expr`); above it, for
+    integral ids, :func:`coarse_assign_arrow` runs the same two-stage
+    semantics on a broadcast numpy structure instead of the
+    O(k x dim) nested literal tree (which is a plan-size blow-up in
+    the k ~ n regime, the exact gap this escape exists for)."""
+    if _use_arrow(len(centroids), df, id_col):
         return coarse_assign_arrow(
             df, centroids, vec_col, id_col, digits, n_groups, nprobe
         )
+    return _coarse_assign_expr(
+        df, centroids, vec_col, id_col, digits, n_groups, nprobe
+    )
+
+
+def _coarse_assign_expr(df, centroids, vec_col, id_col, digits, n_groups, nprobe):
+    """The centroid-literal kernel behind :func:`coarse_assignments`
+    (the :func:`_kmeans_assign` of the two-stage path): group means and
+    the ragged member table ride the plan as literal arrays."""
+    import math
+
+    k = len(centroids)
     g = n_groups or max(1, math.isqrt(k))
     means, members = _group_centroids(centroids, g)
     v = as_double(F.col(vec_col))
@@ -1923,27 +1809,13 @@ def _integral_id(df: DataFrame, id_col: str) -> bool:
     )
 
 
-def _resolve_engine(engine: str, k: int, df: DataFrame, id_col: str) -> str:
-    """Pick the assignment engine: ``expr`` (centroid literals, codegen,
-    zero Python) below the measured crossover, ``arrow`` (broadcast
-    numpy matrix, BLAS matmul per batch) above it. The arrow kernels
-    carry ids as int64, so a non-integral id pins ``auto`` to expr and
-    makes an explicit ``arrow`` request fail loudly up front."""
-    if engine == "expr":
-        return "expr"
-    if engine == "arrow":
-        if not _integral_id(df, id_col):
-            raise TypeError(
-                f"arrow assignment engine needs an integral {id_col!r} "
-                f"(got {df.schema[id_col].dataType.simpleString()}); "
-                "use engine='expr' for non-integral ids"
-            )
-        return "arrow"
-    if engine != "auto":
-        raise ValueError(f"unknown engine {engine!r} (expr|arrow|auto)")
-    if k > _ARROW_K_CROSSOVER and _integral_id(df, id_col):
-        return "arrow"
-    return "expr"
+def _use_arrow(k: int, df: DataFrame, id_col: str) -> bool:
+    """Pick the assignment kernel from what the input shows: centroid
+    literals (codegen, zero Python) up to the measured crossover, the
+    broadcast numpy matrix (BLAS matmul per batch) above it. The arrow
+    kernels carry ids as int64, so a non-integral id stays on the
+    literal plan at any k."""
+    return k > _ARROW_K_CROSSOVER and _integral_id(df, id_col)
 
 
 def _round_half_up_vec(a, digits: int):
@@ -2111,7 +1983,7 @@ def coarse_assign_arrow(
         raise TypeError(
             f"coarse_assign_arrow needs an integral {id_col!r} (got "
             f"{df.schema[id_col].dataType.simpleString()}); use "
-            "coarse_assignments(engine='expr') for non-integral ids"
+            "coarse_assignments for non-integral ids"
         )
     k = len(centroids)
     g = n_groups or max(1, math.isqrt(k))

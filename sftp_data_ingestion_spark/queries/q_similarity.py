@@ -112,29 +112,20 @@ def v_srp_ann_topk(spark, sf_dir):
 @query("v_ivf_ann_topk", oracle=_EXACT_TOPK_ORACLE)
 def v_ivf_ann_topk(spark, sf_dir):
     """Inverted-file ANN graded variant: probes ALL cells (nprobe =
-    n_cells), which is provably identical to exact search — the full
-    assign -> cell-join -> rescore machinery runs under the hash
-    oracle. Centroids are the cheap stride sample: with every cell
-    probed, centroid QUALITY cannot change the result, so paying for
-    k-means here would be dead cost in the benched query. The scale
-    path (nprobe << n_cells + k-means centroids, where quality DOES
-    matter) is graded by v_ivf_ann_recall and the recall thresholds in
-    tests/test_similarity.py.
-
-    r13: the corpus-side cell assignment runs on the Arrow engine
-    (``corpus_engine='arrow'``) — with every cell probed the
-    assignment provably cannot change the output, and the k x dim
-    literal-expression plan was the query's single largest cost
-    (1.25 s/run of plan compose + interpreted HOF eval at sf0.1,
-    k=16, vs ~0.3 s for the broadcast-matmul kernel — the same
-    crossover scripts/kmeans_assign_probe.py measured). The
-    recall-graded sibling (nprobe < n_cells, where assignment IS part
-    of the graded statement) keeps the expr engine."""
+    n_cells), which is exact search by definition — ``ivf_topk``
+    therefore routes it to ``cosine_topk``: no cell is assigned, no
+    probe job runs, and the rows equal the brute-force answer under
+    the exact oracle. Centroids are the cheap stride sample: with
+    every cell probed, centroid QUALITY cannot change the result, so
+    paying for k-means here would be dead cost in the benched query.
+    The scale path (nprobe << n_cells + k-means centroids, where
+    assignment and quality DO matter, and where the cell join runs)
+    is graded by v_ivf_ann_recall and the recall thresholds in
+    tests/test_similarity.py."""
     e = table(spark, sf_dir, "embeddings")
     cents = sim.train_centroids_sample(e, k=16)
     return sim.ivf_topk(
-        e.where(F.col("vec_id") < 100), e, cents, k=5, nprobe=16,
-        corpus_engine="arrow",
+        e.where(F.col("vec_id") < 100), e, cents, k=5, nprobe=16
     )
 
 
@@ -920,8 +911,8 @@ def v_semdedup_coarse_k256(spark, sf_dir):
     DuckDB replay re-derives training, group-Lloyd, two-stage argmax,
     and the drop policy bit-equal. EAGER at composition time.
 
-    Since r13 this point dispatches (engine='auto', k=256 > the
-    measured k~128 crossover) to the ARROW engines — broadcast numpy
+    Since r13 this point dispatches (k=256 > the measured k~128
+    crossover) to the ARROW engines — broadcast numpy
     centroid matrix for the Lloyd iterations
     (``ext.similarity.kmeans_assign_arrow``) and for the two-stage
     argmax (``coarse_assign_arrow``) — so the graded row also pins the

@@ -195,3 +195,25 @@ def test_regrade_first_names_are_registered():
     unknown = [n for n in REGRADE_FIRST if n not in QUERIES]
     assert not unknown, unknown
     assert len(set(REGRADE_FIRST)) == len(REGRADE_FIRST)
+
+
+def test_prev_round_commit_skips_current_round():
+    """bench.py's parity baseline is the newest 'round N:' commit
+    BELOW the round HEAD belongs to: a HEAD that is itself a round
+    snapshot must not be picked as its own baseline, and neither may
+    its same-round siblings."""
+    from bench import _prev_round_from_log
+
+    log = "\n".join([
+        "h15v\tround 15: verdict/advice/correctness/bench",
+        "h15s\tround 15: end-of-round snapshot",
+        "hfix\tFix a plan regression",
+        "h14v\tround 14: verdict/advice/correctness/bench",
+        "h14s\tround 14: end-of-round snapshot",
+        "h13v\tround 13: verdict/advice/correctness/bench",
+    ])
+    assert _prev_round_from_log(log) == "h14v"
+    # HEAD is ordinary work after round 15: round 15 IS the previous one
+    assert _prev_round_from_log("hpr\tPR 3: tidy\n" + log) == "h15v"
+    assert _prev_round_from_log("hpr\tPR 3: tidy\nh0\tv0: seed") is None
+    assert _prev_round_from_log("") is None

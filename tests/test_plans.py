@@ -368,13 +368,18 @@ def test_ann_joins_broadcast_probe_side(spark):
     """IVF and SRP must broadcast the (small) probe table: a shuffle
     join on cell/bucket keys would funnel the whole corpus through
     k_cells (or 2^n_planes) reducer keys — a built-in skew bottleneck
-    no cluster size fixes."""
-    for name in ("v_ivf_ann_topk", "v_srp_ann_topk"):
+    no cluster size fixes. IVF is pinned on v_ivf_ann_recall (nprobe=8
+    of 16, where the cell join runs); v_ivf_ann_topk probes every cell,
+    which is plain exact search with no cell assignment and no Python
+    worker at all."""
+    for name in ("v_ivf_ann_recall", "v_srp_ann_topk"):
         df = q.QUERIES[name](spark, SF)
         p = plan(df)
         assert "BroadcastHashJoin" in p, name
         assert "Exchange hashpartitioning(cell" not in p, name
         assert "Exchange hashpartitioning(bucket" not in p, name
+    p = plan(q.QUERIES["v_ivf_ann_topk"](spark, SF))
+    assert "MapInPandas" not in p
 
 
 def test_salted_join_broadcasts_replicated_dim(spark):

@@ -2,12 +2,18 @@
 brute-force baseline (the property that matters for approximate
 indexes — plan shape alone doesn't prove usefulness)."""
 
+import os
+
 import pyspark.sql.functions as F
 import pytest
 
 from sftp_data_ingestion_spark.ext import similarity as sim
 
 SF = "/root/testdata/sf0.001"
+# every graded scale factor, for the engine-parity tests
+GRADED_SFS = [
+    os.path.join(os.path.dirname(SF), sf) for sf in ("sf0.001", "sf0.01", "sf0.1")
+]
 
 
 @pytest.fixture(scope="module")
@@ -86,11 +92,16 @@ def test_kmeans_deterministic(spark, emb):
     assert a == b
 
 
-def test_arrow_engine_matches_expression_engine(spark, emb):
+@pytest.mark.parametrize("sf_dir", GRADED_SFS, ids=os.path.basename)
+def test_arrow_engine_matches_expression_engine(spark, sf_dir):
     """The Arrow/numpy matmul engine (high-dim path) must return the
     same neighbors in the same order as the flat-codegen expression
-    engine, with sims equal to 6 dp."""
-    queries = emb.where(F.col("vec_id") < 40)
+    engine, with sims equal to 6 dp — on the registry's query set
+    (vec_id < 100) at every graded scale factor, since the Arrow path
+    ranks on BLAS sums and a near-tie could flip membership on one SF
+    but not another."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    queries = emb.where(F.col("vec_id") < 100)
     a = sorted(
         (r["query_id"], r["neighbor_id"], r["sim"])
         for r in sim.cosine_topk_arrow(queries, emb, k=5).collect()
@@ -130,6 +141,21 @@ def test_wrong_dim_fails_loudly(spark, emb):
         sim.cosine_topk(
             emb.where(F.col("vec_id") < 5), emb, k=2, dim=32
         ).collect()
+
+
+def test_ivf_exhaustive_probe_is_exact_search(spark, emb):
+    """Probing every cell is exact search: ivf_topk must return the
+    same rows AND schema as cosine_topk, and compose with no
+    Python-worker node (no cell is assigned at all)."""
+    q = emb.where(F.col("vec_id") < 40)
+    cents = sim.train_centroids_sample(emb, k=8)
+    ivf = sim.ivf_topk(q, emb, cents, k=5, nprobe=len(cents))
+    exact = sim.cosine_topk(q, emb, k=5, dim=64)
+    assert ivf.schema == exact.schema
+    got = sorted(map(tuple, ivf.collect()))
+    assert got == sorted(map(tuple, exact.collect())) and len(got) == 40 * 5
+    p = ivf._jdf.queryExecution().executedPlan().toString()
+    assert "MapInPandas" not in p and "ArrowEvalPython" not in p, p[:2000]
 
 
 def test_ivf_empty_centroids_rejected(spark, emb):
@@ -634,7 +660,7 @@ def test_arrow_flat_assign_matches_expression_engine(spark, emb):
     """kmeans_assign_arrow must be row-identical (id, cluster_id,
     rounded score) to the literal-expression argmax on the same
     trained centroids — the engine swap moves no value."""
-    cents = sim.kmeans_train(emb, k=6, n_iters=2, engine="expr")
+    cents = sim.kmeans_train(emb, k=6, n_iters=2)
     expr = sorted(
         map(
             tuple,
@@ -651,13 +677,13 @@ def test_arrow_coarse_assign_matches_expression_engine(spark, emb):
     """coarse_assign_arrow must replay coarse_assignments exactly:
     same group-Lloyd structure, same top-nprobe group ranking (ties to
     the larger original group index), same member argmax."""
-    cents = sim.kmeans_train(emb, k=12, n_iters=2, engine="expr")
+    cents = sim.kmeans_train(emb, k=12, n_iters=2)
     for nprobe in (1, 2, 3):
         expr = sorted(
             map(
                 tuple,
-                sim.coarse_assignments(
-                    emb, cents, n_groups=4, nprobe=nprobe, engine="expr"
+                sim._coarse_assign_expr(
+                    emb, cents, "embedding", "vec_id", 6, 4, nprobe
                 ).collect(),
             )
         )
@@ -672,12 +698,14 @@ def test_arrow_coarse_assign_matches_expression_engine(spark, emb):
         assert expr == arrow and len(expr) > 0, f"nprobe={nprobe}"
 
 
-def test_arrow_train_matches_expression_train(spark, emb):
+def test_arrow_train_matches_expression_train(spark, emb, monkeypatch):
     """Lloyd iterations under the arrow engine land on the SAME
     rounded centroids as the expression engine (the cross-stage
-    rounding discipline absorbs BLAS summation-order ulps)."""
-    e = sim.kmeans_train(emb, k=6, n_iters=2, engine="expr")
-    a = sim.kmeans_train(emb, k=6, n_iters=2, engine="arrow")
+    rounding discipline absorbs BLAS summation-order ulps). k=6 is
+    below the crossover; dropping the crossover to 0 forces arrow."""
+    e = sim.kmeans_train(emb, k=6, n_iters=2)
+    monkeypatch.setattr(sim, "_ARROW_K_CROSSOVER", 0)
+    a = sim.kmeans_train(emb, k=6, n_iters=2)
     assert e == a
 
 
@@ -704,8 +732,9 @@ def test_arrow_assign_tiebreak_larger_cell(spark):
 
 def test_arrow_engines_lazy_and_dispatch(spark, emb):
     """Arrow engines compose with ZERO jobs (broadcast is not a job),
-    auto-dispatch flips on the measured crossover, and a non-integral
-    id fails loudly up front for arrow while auto falls back to expr."""
+    the dispatch flips on the measured crossover, and a non-integral
+    id fails loudly up front in the arrow kernels while the dispatch
+    keeps it on the literal plan."""
     import pytest as _pytest
 
     cents4 = sim.kmeans_train(emb, k=4, n_iters=1)
@@ -728,16 +757,14 @@ def test_arrow_engines_lazy_and_dispatch(spark, emb):
         plan = frame._jdf.queryExecution().executedPlan().toString()
         assert "Exchange" not in plan, plan[:2000]
 
-    assert sim._resolve_engine("auto", 256, emb, "vec_id") == "arrow"
-    assert sim._resolve_engine("auto", 64, emb, "vec_id") == "expr"
+    assert sim._use_arrow(256, emb, "vec_id") is True
+    assert sim._use_arrow(64, emb, "vec_id") is False
     s = emb.select(F.col("vec_id").cast("string").alias("vec_id"), "embedding")
-    assert sim._resolve_engine("auto", 256, s, "vec_id") == "expr"
+    assert sim._use_arrow(256, s, "vec_id") is False
     with _pytest.raises(TypeError):
         sim.kmeans_assign_arrow(s, big)
     with _pytest.raises(TypeError):
         sim.coarse_assign_arrow(s, big)
-    with _pytest.raises(ValueError):
-        sim._resolve_engine("nope", 8, emb, "vec_id")
 
 
 def test_round_half_up_vec_matches_scalar():
